@@ -29,8 +29,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from adam_spark.llm.cache import rotate_persist
-
 
 def tokens(text: Column) -> Column:
     """Whitespace tokens, empties dropped (portable to DuckDB)."""
@@ -121,10 +119,8 @@ def exact_duplicates(
     # Spark does NOT reuse the scan across the two differently-shaped
     # subtrees of the self-join — unpersisted, the md5 scan runs twice
     # (measured 4.4× at sf0.1).
-    keyed = rotate_persist(
-        "dedup.exact.keyed",
-        df.select(F.col(id_col).alias("id"), fp.alias("fingerprint")),
-        StorageLevel.MEMORY_AND_DISK,
+    keyed = df.select(F.col(id_col).alias("id"), fp.alias("fingerprint")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     # materialize EAGERLY: the join's two subtrees are scheduled
     # concurrently, and a lazily-populated cache lets both sides miss it
@@ -409,10 +405,8 @@ def minhash_lsh_pairs(
             )
         ),
     )
-    banded = rotate_persist(
-        "dedup.minhash.banded",
-        sigs.select("id", "n", bh_arr.alias("bh")),
-        StorageLevel.MEMORY_AND_DISK,
+    banded = sigs.select("id", "n", bh_arr.alias("bh")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     # one aggregate doubles as the eager materializer (both self-join
     # sides would race a lazy cache) AND the broadcast-size probe —
@@ -635,11 +629,7 @@ def simhash_duplicates(
     # groupBy + AQE-split join instead of a hot-key window. Persisting the
     # slim (id, simhash) table stops the 16-wide Catalyst fold from running
     # once per self-join side (measured 6.2× at sf0.1 unpersisted).
-    fps = rotate_persist(
-        "dedup.simhash.fps",
-        simhash(df, id_col, text_col, bits),
-        StorageLevel.MEMORY_AND_DISK,
-    )
+    fps = simhash(df, id_col, text_col, bits).persist(StorageLevel.MEMORY_AND_DISK)
     fps.count()  # eager: both self-join sides would race a lazy cache
     canon = fps.groupBy("simhash").agg(F.min("id").alias("canonical_id"))
     out = (
@@ -805,16 +795,15 @@ def remove_repeated_spans(
     ).withColumn("lkey", F.md5(F.trim("span")))
     # two-stage distinct-doc count: (lkey, id) dedupe partially combines
     # map-side, then the per-key count is a plain partial-aggregated sum
-    hot = rotate_persist(
-        "dedup.spans.hot",
+    hot = (
         spans.where(F.trim("span") != "")
         .select("lkey", "id")
         .distinct()
         .groupBy("lkey")
         .agg(F.count(F.lit(1)).alias("nd"))
         .where(F.col("nd") >= F.lit(int(min_docs)))
-        .select("lkey"),
-        StorageLevel.MEMORY_AND_DISK,
+        .select("lkey")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_hot = hot.count()  # eager persist + size for the broadcast decision
     if broadcast_hot is None:
@@ -930,14 +919,14 @@ def minhash_lsh_pairs_between(
         ),
     )
 
-    def _banded(base, tag):
-        b = rotate_persist(
-            tag,
+    def _banded(base):
+        b = (
             minhash_signatures(
                 base, "id", F.col("sh"), num_hashes,
                 with_size=True, repartition=False, prefiltered=True,
-            ).select("id", "n", bh_arr.alias("bh")),
-            StorageLevel.MEMORY_AND_DISK,
+            )
+            .select("id", "n", bh_arr.alias("bh"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # the _est aggregate below doubles as the eager materializer
         # (broadcast-branch consumers would race a lazy cache); the
@@ -950,8 +939,8 @@ def minhash_lsh_pairs_between(
         ).first()
         return int(st["toks"] or 0) * 16 + int(st["docs"] or 0) * 48
 
-    banded_n = _banded(base_n, "dedup.incremental.banded_new")
-    banded_r = _banded(base_r, "dedup.incremental.banded_ref")
+    banded_n = _banded(base_n)
+    banded_r = _banded(base_r)
     est_n = _est(banded_n) if broadcast_candidates is None else None
     if broadcast_candidates is None and (
         est_n + _est(banded_r) <= VERIFY_BROADCAST_CAP_BYTES
@@ -1006,11 +995,7 @@ def minhash_lsh_pairs_between(
         )
         .select("id_new", "id_ref")
     )
-    cand = rotate_persist(
-        "dedup.incremental.cand",
-        raw.dropDuplicates(["id_new", "id_ref"]),
-        StorageLevel.MEMORY_AND_DISK,
-    )
+    cand = raw.dropDuplicates(["id_new", "id_ref"]).persist(StorageLevel.MEMORY_AND_DISK)
     n_cand = cand.count()
     if broadcast_candidates is None:
         broadcast_candidates = n_cand * 32 <= VERIFY_BROADCAST_CAP_BYTES
@@ -1094,9 +1079,7 @@ def remove_duplicate_substrings(
         # treatment, dedup.py:648)
         from pyspark.storagelevel import StorageLevel
 
-        hot = rotate_persist(
-            "dedup.substrings.hot", hot, StorageLevel.MEMORY_AND_DISK
-        )
+        hot = hot.persist(StorageLevel.MEMORY_AND_DISK)
         n_hot = hot.count()
         broadcast_hot = n_hot * 16 <= HOT_SPAN_BROADCAST_CAP_BYTES
     maybe_bc = F.broadcast if broadcast_hot else (lambda x: x)

@@ -921,10 +921,14 @@ def hashed_classifier_score(
     so a caller can parallelize the expensive branch without taxing the
     pruned path with the spread exchange (the bloom probe-branch spread
     idiom). Results are identical by construction — the branches agree
-    row-for-row whenever feats_df reads the same table.
+    row-for-row whenever feats_df reads the same table. A ``feats_df``
+    lacking ``id_col`` or ``text_col`` raises ``ValueError`` at call time.
     """
     if feats_df is None:
         feats_df = df
+    missing = [c for c in (id_col, text_col) if c not in feats_df.columns]
+    if missing:
+        raise ValueError(f"feats_df lacks column(s) {missing}")
     words = F.filter(
         F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
     )

@@ -1464,7 +1464,10 @@ def test_bounded_cache_releases_persists(spark, docs, embs):
     (only lineage-free checkpoint blocks, which the ContextCleaner
     reclaims on GC) and must not change results — across every
     persisting operator in the llm package (r7: the dedup family and
-    embedding near-dup joined the r6 LM/tfidf/CMS set)."""
+    embedding near-dup joined the r6 LM/tfidf/CMS set). The default
+    bounded_cache=False relies on CacheManager plan matching for
+    repeated builds: an identical rebuild registers no new entry and
+    reads the first build's cached intermediates."""
     from adam_spark.llm.dedup import (
         exact_duplicates,
         minhash_lsh_pairs,
@@ -1482,6 +1485,13 @@ def test_bounded_cache_releases_persists(spark, docs, embs):
 
     spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
+    # CacheManager exposes no entry count; read its private list
+    entries_field = cm.getClass().getDeclaredField("cachedData")
+    entries_field.setAccessible(True)
+
+    def n_entries() -> int:
+        return entries_field.get(cm).size()
+
     toks = docs.select(
         F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("token")
     )
@@ -1507,6 +1517,11 @@ def test_bounded_cache_releases_persists(spark, docs, embs):
     for build in cases:
         spark.catalog.clearCache()
         want = sorted(tuple(r) for r in build(False).collect())
+        n_first = n_entries()
+        again = build(False)
+        assert n_entries() == n_first
+        if n_first:
+            assert "InMemoryTableScan" in again._jdf.queryExecution().executedPlan().toString()
         spark.catalog.clearCache()
         assert cm.isEmpty()
         got = sorted(tuple(r) for r in build(True).collect())

@@ -2,14 +2,15 @@
 
 Usage:
     python tools/isolate.py q1 q2 ...          # time with noop sink + count
-    PLAN_DIR=plans/r13 PLAN_SUFFIX=_before python tools/isolate.py --plans q1 ...
+    PLAN_SUFFIX=_before python tools/isolate.py --plans q1 ...
 
 For each named query (from __spark_entry__.queries()):
   - runs it REPS times against $SPARK_GRAFT_SF_DIR with the noop sink
     (computes every column, no driver collect) and with .count() (the
     driver bench's timed action), reporting best-of;
   - with --plans, also writes .explain("formatted") to
-    $PLAN_DIR/<query>$PLAN_SUFFIX.txt.
+    $PLAN_DIR/<query>$PLAN_SUFFIX.txt (PLAN_DIR defaults to
+    $TMPDIR/adam_spark_plans, outside the checkout).
 
 Prints one line per query: name, noop best, count best.
 """
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -33,7 +35,9 @@ def main() -> None:
     do_plans = "--plans" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("REPS", "3"))
-    plan_dir = os.environ.get("PLAN_DIR", "plans/r13")
+    plan_dir = os.environ.get(
+        "PLAN_DIR", os.path.join(tempfile.gettempdir(), "adam_spark_plans")
+    )
     suffix = os.environ.get("PLAN_SUFFIX", "")
     spark = get_spark("adam-spark-isolate")
     spark.sparkContext.setLogLevel("ERROR")
